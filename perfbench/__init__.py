@@ -1,0 +1,5 @@
+"""Steady-state benchmark of the semantic-similarity engine.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root. See README.md.
+"""
